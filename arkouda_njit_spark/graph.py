@@ -28,6 +28,16 @@ The CSR ``SEGMENTS`` arrays are NOT materialized: per-vertex adjacency is
 recovered by hash partitioning + sort, and every kernel is a join/agg over
 the edge table (SURVEY.md §1.4). At 100 TB this table lives as a bucketed
 Parquet/Iceberg table; ``Graph.write`` / ``Graph.read`` round-trip that.
+
+In memory, both tables (and the lazily built ``degree()`` table) are
+cached once and exposed as FLAT plan leaves over the cached rows
+(``plans.checkpoints.flat_persist``) — the moral equivalent of the
+reference's named server-side arrays that every kernel reads directly.
+A kernel's plan therefore starts at a one-node scan that keeps the edge
+table's hash(src) partitioning and (src, dst) order and the cache's
+measured size, instead of dragging the dedup / dense-rank / remap build
+lineage through every query. Lost cache blocks still recompute from that
+lineage; ``Graph.unpersist`` releases the caches.
 """
 
 from __future__ import annotations
@@ -37,6 +47,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plans.checkpoints import flat_persist
 from .plans.partitioning import dense_rank_ids
 
 EDGE_COLS = ("src_block", "src", "dst", "weight")
@@ -96,6 +107,8 @@ class Graph:
         self._n_vertices = n_vertices
         self._n_edges = n_edges
         self._degrees: DataFrame | None = None
+        # caches the tables above are derived from, released with them
+        self._build_caches: list[DataFrame] = []
 
     # -- construction ------------------------------------------------------
     @classmethod
@@ -178,14 +191,15 @@ class Graph:
             .unionAll(dedup.select(F.col("dst").alias("label")))
             .distinct()
         )
-        # The two-pass dense rank already counts the labels, so the old
-        # explicit vertices.count() action (a full extra pass over the
-        # vertex table) is unnecessary; the persisted vertices materialize
-        # inside the edge build's first broadcast construction below.
+        # The two-pass dense rank already counts the labels (n_vertices);
+        # the vertex map's own count is the cache's materialization, after
+        # which the remap joins below broadcast from the cached rows.
         from .plans.partitioning import dense_rank_ids_counted
 
-        vertices, n_vertices = dense_rank_ids_counted(labels, "label", P, out_col="vid")
-        vertices = vertices.repartition(P, "vid").persist()
+        vertices, n_vertices, ranked = dense_rank_ids_counted(
+            labels, "label", P, out_col="vid"
+        )
+        vertices, _ = flat_persist(vertices.repartition(P, "vid"))
 
         # Remap joins: the vertex map's size is opaque to Catalyst after the
         # mapInPandas dense rank, so hint broadcast explicitly while it fits
@@ -217,14 +231,17 @@ class Graph:
                     "weight",
                 )
             )
-        edges = (
+        # Flat leaves over the caches: every later query plans against a
+        # one-node scan of the cached rows (keeping hash(src) partitioning
+        # and the (src, dst) order), not the dedup / dense-rank / remap
+        # lineage above, whose plan text Spark would otherwise re-render at
+        # every stage of every kernel (plans/checkpoints.flat_persist).
+        edges, total = flat_persist(
             remapped.withColumn("src_block", F.pmod(F.xxhash64("src"), F.lit(P)).cast("int"))
             .select(*EDGE_COLS)
             .repartition(P, "src")
             .sortWithinPartitions("src", "dst")
-            .persist()
         )
-        total = edges.count()  # materialize the canonical table; free dedup
         dedup.unpersist()
         # n_edges comes free from the materialization count whenever the
         # loop count is known by construction (loops were filtered, or the
@@ -243,6 +260,7 @@ class Graph:
             n_vertices=n_vertices,
             n_edges=n_edges,
         )
+        g._build_caches.append(ranked)
         return g
 
     # -- scalars -----------------------------------------------------------
@@ -314,7 +332,7 @@ class Graph:
             self.vertices.join(deg, "vid", "left")
             .select("vid", F.coalesce("degree", F.lit(0)).alias("degree"))
         )
-        self._degrees = out.repartition(self.num_partitions, "vid").persist()
+        self._degrees, _ = flat_persist(out.repartition(self.num_partitions, "vid"))
         return self._degrees
 
     # -- persistence (the bucketed-table path for 100 TB reuse) -------------
@@ -433,17 +451,26 @@ class Graph:
     @classmethod
     def read(cls, spark: SparkSession, path: str, num_partitions: int | None = None) -> "Graph":
         P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        edges = (
+        edges, total = flat_persist(
             spark.read.parquet(f"{path}/edges")
             .repartition(P, "src")
             .sortWithinPartitions("src", "dst")
-            .persist()
         )
-        vertices = spark.read.parquet(f"{path}/vertices").repartition(P, "vid").persist()
-        return cls(edges, vertices, num_partitions=P)
+        vertices, n_vertices = flat_persist(
+            spark.read.parquet(f"{path}/vertices").repartition(P, "vid")
+        )
+        return cls(
+            edges,
+            vertices,
+            num_partitions=P,
+            n_vertices=n_vertices,
+            n_edges=total if cls.directed else None,
+        )
 
     def unpersist(self) -> None:
-        for df in (self.edges, self.vertices, self._degrees):
+        """Release the cached tables (the flat leaves route this to the
+        cache underneath them)."""
+        for df in (self.edges, self.vertices, self._degrees, *self._build_caches):
             if df is not None:
                 df.unpersist()
 

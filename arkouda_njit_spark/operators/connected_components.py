@@ -50,7 +50,9 @@ def connected_components(
     # scans it every round and the canonical table's columnar-cache decode
     # was a measurable per-round cost (r6: 4.2 -> 3.2 s for sf0.1 CC with
     # the checkpointed projection; the one-time checkpoint pass amortizes
-    # over the rounds). The canonical edge table itself stays persisted.
+    # over the rounds). The canonical edge table itself stays cached,
+    # exposed as a flat leaf over its cache (graph.py module docstring), so
+    # this checkpoint pass reads the cached rows through a one-node plan.
     if graph.directed:
         edges = flat_checkpoint(
             graph.edges.select("src", "dst")

@@ -32,6 +32,7 @@ from collections import deque
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.checkpoints import flat_persist
 from .bfs import multi_source_bfs
 from .connected_components import connected_components
 
@@ -68,7 +69,7 @@ def diameter(graph: Graph, exact: bool = False, bfs_threshold: int = 2500) -> in
     """
     import pandas as pd
 
-    comps = connected_components(graph).persist()
+    comps, _ = flat_persist(connected_components(graph))
     sizes = comps.groupBy("component").agg(F.count("*").alias("size"))
     edges = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.checkpoints import flat_persist
 from .bfs import multi_source_bfs
 
 
@@ -95,7 +96,7 @@ def distance_sketch(
             e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .distinct()
         )
-    edges = edges.persist()
+    edges, _ = flat_persist(edges)
     # PRUNED multi-set BFS (the paper's semantics): within a set, seeds
     # COMPETE — a vertex is claimed once, by its closest seed (ties: min
     # seed id), and only the claimant's wave continues through it. State

@@ -38,7 +38,8 @@ def label_propagation(
 
     # Per-kernel checkpointed (src, dst) projection — same rationale and
     # measurement as connected_components (r6: avoids the canonical
-    # table's columnar-cache decode on every round).
+    # table's columnar-cache decode on every round). The canonical table
+    # stays cached behind its flat leaf (graph.py module docstring).
     if graph.directed:
         edges = flat_checkpoint(
             graph.edges.select("src", "dst")

@@ -9,9 +9,10 @@ reference project's oracle convention, algorithm_test.py:66-79):
 
   converged when  sum_v |x_{t+1}(v) - x_t(v)| < N * tol   (nx default 1e-6).
 
-Scale design (north rule): the edge table stays cached and hash-partitioned
-by ``src``; the rank vector is co-partitioned by ``vid`` so the per-iteration
-``ranks ⋈ edges`` needs no exchange on the (large) edge side. The dangling
+Scale design (north rule): the edge table stays cached (a flat plan leaf
+over the cache, graph.py) and hash-partitioned by ``src``; the rank vector
+is co-partitioned by ``vid`` so the per-iteration ``ranks ⋈ edges`` needs
+no exchange on the (large) edge side. The dangling
 mass is ONE scalar aggregate per iteration broadcast back into the update
 expression — never a driver-side loop over vertices. Hub skew on ``dst``
 is bounded by map-side partial aggregation of contributions (sum is
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.checkpoints import flat_checkpoint, flat_persist
 from ..plans.iterate import FixpointLoop, l1_diff
 from ..plans.joins import state_join_side
 
@@ -51,9 +53,8 @@ def prepare_pagerank(graph: Graph, weight: str | None = None):
     # 8.7 -> 4.3 s for 10 sf0.1 iterations with everything else unchanged
     # (r6). The derived per-call transition table is cheap to rebuild, so
     # the checkpoint's weaker fault-tolerance story is acceptable here
-    # (the canonical edge table itself stays persisted).
-    from ..plans.checkpoints import flat_checkpoint
-
+    # (the canonical edge table itself stays cached, behind a flat leaf
+    # whose lost blocks recompute from the build lineage — graph.py).
     trans = flat_checkpoint(
         edges.join(outw, "src").select(
             "src", "dst", (F.col("w") / F.col("out_total")).alias("p")
@@ -63,13 +64,11 @@ def prepare_pagerank(graph: Graph, weight: str | None = None):
     # Dangling vertices (no out-edges). Undirected graphs never have any
     # (every vertex has an incident symmetric edge), so the per-iteration
     # dangling-mass aggregate is skipped entirely when the set is empty.
-    dangling = (
+    dangling, n_dangling = flat_persist(
         graph.vertices.join(outw, graph.vertices.vid == outw.src, "left_anti")
         .select("vid")
-        .persist()
     )
-    has_dangling = not dangling.isEmpty()
-    return trans, dangling, has_dangling
+    return trans, dangling, n_dangling > 0
 
 
 def pagerank(
@@ -215,12 +214,8 @@ def personalized_pagerank(
         [(int(k), float(v) / total) for k, v in personalization.items() if v],
         "label long, t double",
     )
-    tvec = (
-        graph.vertices.join(seed_tbl, "label")
-        .select("vid", "t")
-        .persist()
-    )
-    if tvec.count() != seed_tbl.count():
+    tvec, n_seeds = flat_persist(graph.vertices.join(seed_tbl, "label").select("vid", "t"))
+    if n_seeds != seed_tbl.count():
         tvec.unpersist()
         raise ValueError("personalization refers to labels not in the graph")
 
@@ -351,7 +346,7 @@ def ppr_montecarlo(
         )
         .localCheckpoint(eager=True)
     )
-    edges = graph.edges.select("src", "dst").persist()
+    edges, _ = flat_persist(graph.edges.select("src", "dst"))
     thresh = int(alpha * (1 << 30))
     ended = []  # each element filters a checkpointed state: flat lineage
     for t in range(1, max_steps + 1):

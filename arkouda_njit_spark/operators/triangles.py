@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.checkpoints import flat_checkpoint, flat_persist
 
 # past this many edges, wedge/closing joins dispatch to shuffle_hash: the
 # broadcast hash build is single-threaded on the driver (measured flat 2-to-8
@@ -137,15 +138,16 @@ def _triangle_rows_cached(
     graph: Graph, und: DataFrame | None = None
 ) -> tuple[DataFrame, list[DataFrame]]:
     """(triangle rows, cache handles): the pair set and oriented table are
-    persisted ONCE (one symmetrize+distinct shuffle feeds both the degree
-    orientation and the closing-edge semi-join); the caller unpersists the
-    handles after its terminal action. Pass ``und`` (distinct (u,v), u<v)
-    to reuse a pair set the caller already computed — e.g. the triad
-    census's dyad table — instead of re-running the symmetrize+distinct
-    shuffle."""
+    cached ONCE (one symmetrize+distinct shuffle feeds both the degree
+    orientation and the closing-edge semi-join) as flat leaves, so the
+    wedge query plans over two one-node scans instead of the pair set's
+    and orientation's lineage; the caller unpersists the handles after its
+    terminal action. Pass ``und`` (distinct (u,v), u<v) to reuse a pair
+    set the caller already computed — e.g. the triad census's dyad table —
+    instead of re-running the symmetrize+distinct shuffle."""
     P = graph.num_partitions
-    und = (_undirected_simple_edges(graph) if und is None else und).persist()
-    o = oriented_edges(graph, und=und).repartition(P, "lo").persist()
+    und, _ = flat_persist(_undirected_simple_edges(graph) if und is None else und)
+    o, _ = flat_persist(oriented_edges(graph, und=und).repartition(P, "lo"))
     # Join strategy: past ~1M edges the oriented/pair tables cross the
     # broadcast threshold in estimated size anyway, but more importantly a
     # BroadcastHashJoin builds its hash relation single-threaded on the
@@ -175,7 +177,7 @@ def _triangle_rows_localized(
     instead of the whole graph. A 5-vertex query on a 10^12-edge graph
     must not run the global kernel."""
     P = graph.num_partitions
-    und = _undirected_simple_edges(graph).persist()
+    und, _ = flat_persist(_undirected_simple_edges(graph))
     # N(Q) ∪ Q. Neighbors come from the SYMMETRIZED canonical table (both
     # endpoint directions), not graph.edges src-side only — on a DiGraph
     # the src-only semi-join misses in-neighbor pivots and undercounts
@@ -187,11 +189,10 @@ def _triangle_rows_localized(
         .select(F.col("nbr").alias("lo"))
     )
     pivots = nbrs.unionAll(qvids.select(F.col("vid").alias("lo"))).distinct()
-    o = (
+    o, _ = flat_persist(
         oriented_edges(graph, und=und)
         .join(pivots, "lo", "left_semi")
         .repartition(P, "lo")
-        .persist()
     )
     wsh = graph.n_edges >= WEDGE_SHUFFLE_HASH_THRESHOLD
     sh = (lambda df: df.hint("shuffle_hash")) if wsh else (lambda df: df)
@@ -322,8 +323,6 @@ def approx_triangle_count(
 
     Returns {"estimate", "sampled_triangles", "p", "sampled_edges"}.
     """
-    from ..plans.checkpoints import flat_checkpoint
-
     if not 0.0 < p <= 1.0:
         raise ValueError(f"p must be in (0, 1], got {p}")
     und = _undirected_simple_edges(graph)

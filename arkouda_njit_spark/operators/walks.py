@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.checkpoints import flat_persist
 
 
 def random_walks(
@@ -47,7 +48,7 @@ def random_walks(
         .localCheckpoint(eager=True)
     )
     finished = None
-    edges = graph.edges.select("src", "dst").persist()
+    edges, _ = flat_persist(graph.edges.select("src", "dst"))
     for t in range(1, walk_length + 1):
         # the candidate fan-out (frontier × out-degree) carries ONLY
         # (walk_id, dst) — the growing path array joins back afterwards by
@@ -152,7 +153,7 @@ def node2vec_walks(
     if p <= 0 or q <= 0:
         raise ValueError("p and q must be positive")
     k = walks_per_vertex
-    edges = graph.edges.select("src", "dst").distinct().persist()
+    edges, _ = flat_persist(graph.edges.select("src", "dst").distinct())
     prev_edges = edges.select(
         F.col("src").alias("prev"), F.col("dst").alias("cand"), F.lit(True).alias("_nb")
     )

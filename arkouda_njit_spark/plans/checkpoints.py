@@ -31,6 +31,17 @@ pinned by tests to the installed pyspark; if the internals ever move, the
 helper degrades to the plain checkpoint (correct, just exposed to the
 compounding) and remembers the failure so the fallback is decided once
 per process, not once per iteration.
+
+:func:`flat_persist` applies the same leaf to the engine's long-lived
+caches (a graph's edge and vertex tables, a kernel's shared intermediate
+tables). A ``persist()``ed DataFrame keeps its whole build plan: every
+later query over it re-analyzes that tree, and Spark renders it as plan
+text when each SQL execution starts and again at every adaptive stage
+update — 522 KB for an RMAT-11 graph's edge table, 6.1 MB for one
+triangle-count query. The leaf scans the same cached blocks through a
+one-node plan, so plan work stops growing with the build's history.
+Unlike ``localCheckpoint``, the rows stay in the persisted cache whose
+lineage recomputes lost blocks.
 """
 
 from __future__ import annotations
@@ -38,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _STRIP_BROKEN = False
+_LEAF_BROKEN = False
 _INSTALLED = False
 
 
@@ -50,6 +62,78 @@ def flat_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     instead of carrying the pre-checkpoint plan's join-size product.
     """
     return _stripped(df.localCheckpoint(eager=eager))
+
+
+def flat_persist(df: DataFrame) -> tuple[DataFrame, int]:
+    """``persist()`` + materializing count, returned as a flat plan leaf.
+
+    Returns ``(leaf, rows)``. The leaf's logical plan is one ``LogicalRDD``
+    over the cached scan's rows, carrying that scan's output partitioning
+    and ordering (a ``src``-partitioned table still joins and groups on
+    ``src`` with no exchange) and the cache's measured ``Statistics``
+    (join selection sees the same sizes as over the persisted frame).
+    ``leaf.unpersist()`` releases the cache underneath. If Spark's
+    internals move, the plain persisted frame is returned instead, decided
+    once per process.
+    """
+    global _LEAF_BROKEN
+    cached = df.persist()
+    rows = cached.count()
+    if _LEAF_BROKEN:
+        return cached, rows
+    try:
+        return _leaf_over_cache(cached), rows
+    except Exception:  # pragma: no cover - depends on Spark internals
+        _LEAF_BROKEN = True
+        return cached, rows
+
+
+def _leaf_over_cache(cached: DataFrame) -> DataFrame:
+    spark = cached.sparkSession
+    jvm = spark._jvm  # type: ignore[attr-defined]
+    jsession = spark._jsparkSession  # type: ignore[attr-defined]
+    dataset_companion = getattr(
+        getattr(jvm.org.apache.spark.sql.classic, "Dataset$"), "MODULE$"
+    )
+    # a fresh QueryExecution, so the cache lookup sees the new cache entry
+    qe = dataset_companion.ofRows(
+        jsession, cached._jdf.queryExecution().logical()  # type: ignore[attr-defined]
+    ).queryExecution()
+    relation = qe.optimizedPlan()
+    scan = qe.sparkPlan()
+    if (
+        relation.getClass().getSimpleName() != "InMemoryRelation"
+        or scan.getClass().getSimpleName() != "InMemoryTableScanExec"
+    ):
+        return cached
+    rdd = qe.toRdd()
+    partitioning = scan.outputPartitioning()
+    if partitioning.numPartitions() not in (0, rdd.getNumPartitions()):
+        return cached
+    none = getattr(getattr(jvm.scala, "None$"), "MODULE$")
+    leaf_plan = jvm.org.apache.spark.sql.execution.LogicalRDD(
+        scan.output(),
+        rdd,
+        partitioning,
+        scan.outputOrdering(),
+        False,  # isStreaming
+        none,  # stream
+        jsession,
+        jvm.scala.Some(relation.stats()),  # originStats: measured by the count
+        none,  # originConstraints
+    )
+    leaf = DataFrame(dataset_companion.ofRows(jsession, leaf_plan), spark)
+
+    # the cache is keyed by the persisted frame's plan, which the leaf no
+    # longer carries: route the leaf's unpersist to it
+    def unpersist(blocking: bool = False) -> DataFrame:
+        cached.unpersist(blocking)
+        leaf.is_cached = False
+        return leaf
+
+    leaf.unpersist = unpersist  # type: ignore[method-assign]
+    leaf.is_cached = True
+    return leaf
 
 
 def install_flat_checkpoints() -> None:

@@ -166,11 +166,14 @@ class FixpointLoop:
     def run(self, state: DataFrame, resume: bool = True) -> DataFrame:
         spark = state.sparkSession
         start_iter = 0
+        # index of the epoch holding the current state, if one does
+        written = None
         if resume and self.checkpoint_dir:
             last = self.latest_epoch()
             if last is not None:
                 state = spark.read.parquet(self._epoch_path(last))
                 start_iter = last + 1
+                written = last
                 # reload pre-crash metrics so the next epoch write doesn't
                 # clobber them (self.metrics starts empty in a new process)
                 mpath = os.path.join(self.checkpoint_dir, "metrics.json")
@@ -229,10 +232,14 @@ class FixpointLoop:
 
             if self.checkpoint_dir and ((i - 1) % self.epoch_interval == 0):
                 self._write_epoch(state, i - 1)
+                written = i - 1
 
             if self.convergence and changed <= self.tol:
                 break
 
-        if self.checkpoint_dir:
-            self._write_epoch(state, self.max_iterations)
+        # the final state is the epoch of the last iteration run, so a
+        # resume with a larger max_iterations continues at the next step;
+        # nothing to write when that epoch was just written
+        if self.checkpoint_dir and i > 0 and written != i - 1:
+            self._write_epoch(state, i - 1)
         return state

@@ -32,11 +32,15 @@ def dense_rank_ids(df: DataFrame, col: str, num_partitions: int, out_col: str = 
 
 def dense_rank_ids_counted(
     df: DataFrame, col: str, num_partitions: int, out_col: str = "vid"
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, int, DataFrame]:
     """:func:`dense_rank_ids` plus the total row count, which the two-pass
     scheme computes anyway (sum of the per-partition counts) — callers that
     need n for a broadcast-vs-shuffle decision get it for free instead of
-    paying a separate count action."""
+    paying a separate count action — and the persisted range-partitioned
+    input the ids are computed from. The caller owns that cache: keep it
+    while the ids may be recomputed (a recompute would re-sample the range
+    bounds, and the prefix offsets only fit the first sample), then
+    unpersist it."""
     spark = df.sparkSession
     ordered = (
         df.select(col)
@@ -77,7 +81,7 @@ def dense_rank_ids_counted(
             yield out
 
     result = ordered.mapInPandas(attach, schema=out_schema)
-    return result, acc
+    return result, acc, ordered
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

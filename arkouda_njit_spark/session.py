@@ -23,6 +23,25 @@ from pyspark.sql import SparkSession
 
 DEFAULT_PARTITIONS = 32
 
+# driver-heap ceiling: local-mode executors share the driver JVM heap, and
+# 8g starved the 32-thread shuffle/persist working set at sf0.1 (measured
+# ~10% slower end-to-end than 48g on an idle host)
+MAX_DRIVER_MEMORY_GB = 48
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: ~60% of physical RAM, never above
+    ``MAX_DRIVER_MEMORY_GB``. -Xmx is a cap, not a reservation, but a cap
+    above physical RAM lets the heap grow until the kernel OOM-kills the
+    JVM (observed: a 48g cap on a 15 GB host died mid-suite at 15.3 GB
+    resident), leaving every later call on the session refused."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf: keep the cap
+        return f"{MAX_DRIVER_MEMORY_GB}g"
+    gb = int(0.6 * total / (1 << 30))
+    return f"{max(1, min(MAX_DRIVER_MEMORY_GB, gb))}g"
+
 
 def get_spark(
     master: str | None = None,
@@ -51,11 +70,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local-mode executors share the driver JVM heap: 8g starved the
-        # 32-thread shuffle/persist working set at sf0.1 (measured ~10%
-        # slower end-to-end than 48g on an idle host; -Xmx is a cap, not a
-        # reservation, so the higher default costs idle sessions nothing)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_checkpoint
+from ..plans.checkpoints import flat_checkpoint, flat_persist
 from ..plans.partitioning import dense_rank_ids, dense_rank_ids_counted
 
 TWO63 = float(2**63)
@@ -285,8 +285,9 @@ def _string_keyed_digraph(
     string-keyed edge table (src_col, dst_col, weight): dense vid remap by
     ascending key, src_block tag, src-partitioned sorted edge buckets.
     One implementation for the url graph, the host rollup, and streaming
-    snapshots — ``eager`` swaps persist() for an eager localCheckpoint so
-    the result outlives its source files (streaming state GC).
+    snapshots — ``eager`` swaps the cache for an eager localCheckpoint so
+    the result outlives its source files (streaming state GC); otherwise
+    both tables are flat leaves over their caches, like ``Graph._build``'s.
 
     The deduplicated link table is eagerly materialized FIRST: it feeds
     the key-extraction pass and the remap joins, and for the web graph
@@ -300,7 +301,7 @@ def _string_keyed_digraph(
         .unionAll(dedup.select(F.col(dst_col).alias("u")))
         .distinct()
     )
-    vertices, n_keys = dense_rank_ids_counted(keys, "u", P, out_col="vid")
+    vertices, n_keys, ranked = dense_rank_ids_counted(keys, "u", P, out_col="vid")
     vertices = vertices.withColumnRenamed("u", "url")
     # The vertex map's size is opaque to Catalyst after the mapInPandas
     # dense rank, so the string-keyed remap joins planned as sort-merge
@@ -319,25 +320,31 @@ def _string_keyed_digraph(
         .select(F.col("_svid").alias("src"), F.col("_dvid").alias("dst"), "weight")
     )
 
+    # materialized now either way: the first kernel action otherwise
+    # references cold caches from several subtrees at once and the
+    # concurrent scans recompute the remap joins per consumer
     def hold(df):
-        return df.localCheckpoint(eager=True) if eager else df.persist()
+        if eager:
+            return df.localCheckpoint(eager=True), None
+        return flat_persist(df)
 
-    edges = hold(
+    edges, n_edges = hold(
         remapped.withColumn("src_block", F.pmod(F.xxhash64("src"), F.lit(P)).cast("int"))
         .select("src_block", "src", "dst", "weight")
         .repartition(P, "src")
         .sortWithinPartitions("src", "dst")
     )
-    verts = hold(
+    verts, _ = hold(
         vertices.select("vid", F.col("vid").alias("label"), "url").repartition(P, "vid")
     )
-    if not eager:
-        # materialize the persists now: the first kernel action otherwise
-        # references the cold caches from several subtrees at once and the
-        # concurrent scans recompute the remap joins per consumer
-        edges.count()
-        verts.count()
-    return DiGraph(edges, verts, weighted=True, num_partitions=P)
+    g = DiGraph(
+        edges, verts, weighted=True, num_partitions=P, n_vertices=n_keys, n_edges=n_edges
+    )
+    if eager:
+        ranked.unpersist()  # the checkpoints no longer read it
+    else:
+        g._build_caches.append(ranked)
+    return g
 
 
 def build_host_graph(pages: DataFrame, num_partitions: int | None = None) -> DiGraph:

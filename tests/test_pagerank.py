@@ -163,3 +163,32 @@ class TestWarmStartPagerank:
         vid_to_label = {r["vid"]: r["label"] for r in graph.vertices.collect()}
         for vid, r in got.items():
             assert r == pytest.approx(expected[vid_to_label[vid]], abs=1e-5)
+
+
+def test_durable_resume_with_larger_budget_matches_fresh_run(spark, tmp_path):
+    """The final durable epoch is labelled with the last iteration run, so
+    a resume with a larger ``max_iterations`` continues at the next step:
+    6 durable iterations + a resume to 10 equal a fresh 10-iteration run,
+    and the 6-iteration run writes no duplicate final epoch."""
+    import os
+
+    graph = Graph.from_edges(spark, ALGO28_SRC, ALGO28_DST)
+    ckpt = str(tmp_path / "pr")
+
+    def epochs():
+        return sorted(int(e.split("=")[1]) for e in os.listdir(ckpt) if e.startswith("epoch="))
+
+    pagerank(graph, tol=0, max_iterations=6, checkpoint_dir=ckpt).collect()
+    assert epochs() == [0, 5]
+    resumed = {
+        r["vid"]: r["rank"]
+        for r in pagerank(graph, tol=0, max_iterations=10, checkpoint_dir=ckpt).collect()
+    }
+    assert epochs() == [0, 5, 9]
+    fresh = {r["vid"]: r["rank"] for r in pagerank(graph, tol=0, max_iterations=10).collect()}
+    assert resumed.keys() == fresh.keys()
+    for vid, rank in fresh.items():
+        assert resumed[vid] == pytest.approx(rank, abs=1e-12)
+    # and it is not the 9- or 11-iteration answer an off-by-one resume gives
+    nine = {r["vid"]: r["rank"] for r in pagerank(graph, tol=0, max_iterations=9).collect()}
+    assert max(abs(nine[v] - fresh[v]) for v in fresh) > 1e-9

@@ -381,3 +381,78 @@ def test_crawl_frontier_no_global_sort(spark):
     assert "WindowGroupLimit" in plan
     assert "TakeOrderedAndProject" in plan
     assert "Exchange SinglePartition" not in plan
+
+
+def _rmat_graph(spark, scale: int = 9, edge_factor: int = 8):
+    """A small RMAT graph (Graph500 quadrant probabilities): skewed
+    degrees and plenty of triangles, built through the full pipeline."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    m = edge_factor << scale
+    src = np.zeros(m, dtype=np.int64)
+    dst = np.zeros(m, dtype=np.int64)
+    for bit in range(scale):
+        r = rng.random(m)
+        src |= ((r >= 0.57 + 0.19) << bit).astype(np.int64)
+        dst |= (((r >= 0.57) & (r < 0.57 + 0.19)) | (r >= 0.57 + 0.19 + 0.19)).astype(
+            np.int64
+        ) << bit
+    return Graph.from_edges(spark, src.tolist(), dst.tolist())
+
+
+def test_graph_tables_are_flat_cache_leaves(spark):
+    """g.edges / g.vertices plan as ONE LogicalRDD leaf over the cached
+    rows: no InMemoryRelation (and so none of the dedup / dense-rank /
+    remap build lineage under it) reaches a kernel's plan."""
+    g = _rmat_graph(spark, scale=6)
+    try:
+        for df in (g.edges, g.vertices, g.degree()):
+            plan = df._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LogicalRDD", plan.toString()
+            assert plan.children().isEmpty()
+            assert "InMemoryRelation" not in plan.toString()
+        # the leaf keeps the cache's hash(src) layout: a src-keyed
+        # aggregation over the edge table needs no exchange
+        agg = _plan(g.edges.groupBy("src").count())
+        assert "Exchange" not in agg, agg
+    finally:
+        g.unpersist()
+
+
+def test_triangle_count_plan_stays_small(spark):
+    """The wedge query plans over flat leaves: its formatted explain stays
+    small instead of embedding the graph build's lineage three times."""
+    from arkouda_njit_spark.operators.triangles import _triangle_rows_cached
+
+    g = _rmat_graph(spark)
+    tri, handles = _triangle_rows_cached(g)
+    try:
+        plan = _plan(tri)
+        assert len(plan.encode()) < 64 * 1024, len(plan.encode())
+        assert "InMemoryRelation" not in plan
+    finally:
+        for h in handles:
+            h.unpersist()
+        g.unpersist()
+
+
+def test_graph_unpersist_releases_every_cache(spark):
+    """Graph.unpersist (and a kernel's own cleanup) leaves no cached RDD
+    behind: the leaves route unpersist to the caches underneath them."""
+    from arkouda_njit_spark.operators.triangles import triangle_count
+
+    jsc = spark.sparkContext._jsc
+
+    def cached_ids():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    # ids, not sizes: checkpoint blocks of earlier tests in the session
+    # are released by the JVM's GC at any time
+    before = cached_ids()
+    g = _rmat_graph(spark, scale=6)
+    g.degree()
+    assert triangle_count(g) > 0
+    assert cached_ids() - before
+    g.unpersist()
+    assert not cached_ids() - before
