@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.local import local_frame
+
 #: the model is broadcast per epoch — two float32 matrices of
 #: vocab_limit × dim must fit comfortably in executor memory.
 DEFAULT_VOCAB_LIMIT = 1 << 22
@@ -246,9 +248,7 @@ def train_skipgram(
     )
     n_vocab = freq_df.count()
     if n_vocab == 0:
-        empty = spark.createDataFrame(
-            [], "vid long, embedding array<float>"
-        )
+        empty = local_frame(spark, [], "vid long, embedding array<float>")
         return SkipgramModel(embeddings=empty)
     if n_vocab > vocab_limit:
         raise ValueError(

@@ -39,6 +39,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 
 def _norm_terms(text_col: str) -> "F.Column":
     """array<string> of normalized terms (duplicates kept — term freq)."""
@@ -210,7 +212,8 @@ def bm25(
     if not terms:
         raise ValueError("bm25 query has no terms after normalization")
     spark = df.sparkSession
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(0, t) for t in sorted(set(terms))], "query_id int, term string"
     )
     return bm25_batch(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 
 # hard cap on driver-resident IVF centroid cells (nlist * dim); 64M doubles
 # ~= 512 MB — beyond this ivf_build refuses instead of assuming it fits
@@ -219,7 +221,7 @@ def ivf_build(
         return nv.join(best, id_col)
 
     for _ in range(iters):
-        cents_df = spark.createDataFrame(cent_rows, "list_id int, cvec array<double>")
+        cents_df = local_frame(spark, cent_rows, "list_id int, cvec array<double>")
         assigned = assign(cents_df)
         means = (
             assigned.select("list_id", F.posexplode("nvec").alias("pos", "x"))
@@ -238,7 +240,7 @@ def ivf_build(
             new_rows.append((lid, [x / n for x in vec] if n > 0 else old))
         cent_rows = new_rows
 
-    cents_df = spark.createDataFrame(cent_rows, "list_id int, cvec array<double>")
+    cents_df = local_frame(spark, cent_rows, "list_id int, cvec array<double>")
     tagged = assign(cents_df)
     nv.unpersist()
     return tagged, cents_df

@@ -29,15 +29,17 @@ recovered by hash partitioning + sort, and every kernel is a join/agg over
 the edge table (SURVEY.md §1.4). At 100 TB this table lives as a bucketed
 Parquet/Iceberg table; ``Graph.write`` / ``Graph.read`` round-trip that.
 
-In memory, both tables (and the lazily built ``degree()`` table) are
-cached once and exposed as FLAT plan leaves over the cached rows
-(``plans.checkpoints.flat_persist``) — the moral equivalent of the
-reference's named server-side arrays that every kernel reads directly.
+In memory, both tables are cached once and exposed as FLAT plan leaves
+over the cached rows (``plans.checkpoints.flat_persist``) — the moral
+equivalent of the reference's named server-side arrays that every kernel
+reads directly.
 A kernel's plan therefore starts at a one-node scan that keeps the edge
 table's hash(src) partitioning and (src, dst) order and the cache's
 measured size, instead of dragging the dedup / dense-rank / remap build
 lineage through every query. Lost cache blocks still recompute from that
-lineage; ``Graph.unpersist`` releases the caches.
+lineage; ``Graph.unpersist`` releases the caches. The lazily built
+``degree()`` table is a leaf too: a plain cache over the vertex leaf is
+not found by a query that reads ``graph.vertices`` a second time.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans.checkpoints import flat_persist
+from .plans.local import local_frame
 from .plans.partitioning import dense_rank_ids
 
 EDGE_COLS = ("src_block", "src", "dst", "weight")
@@ -72,8 +75,8 @@ def _as_edge_df(
         )
     if wgt is None:
         wgt = [1.0] * len(src)
-    rows = list(zip([int(s) for s in src], [int(d) for d in dst], [float(w) for w in wgt]))
-    return spark.createDataFrame(rows, "src long, dst long, weight double")
+    rows = zip([int(s) for s in src], [int(d) for d in dst], [float(w) for w in wgt])
+    return local_frame(spark, rows, "src long, dst long, weight double")
 
 
 class Graph:
@@ -196,13 +199,11 @@ class Graph:
         # which the remap joins below broadcast from the cached rows.
         from .plans.partitioning import dense_rank_ids_counted
 
-        vertices, n_vertices, ranked = dense_rank_ids_counted(
-            labels, "label", P, out_col="vid"
-        )
-        vertices, _ = flat_persist(vertices.repartition(P, "vid"))
+        ids, n_vertices = dense_rank_ids_counted(labels, "label", P, out_col="vid")
+        vertices, _ = flat_persist(ids.repartition(P, "vid"))
 
         # Remap joins: the vertex map's size is opaque to Catalyst after the
-        # mapInPandas dense rank, so hint broadcast explicitly while it fits
+        # dense rank, so hint broadcast explicitly while it fits
         # (sort-merge with a full edge shuffle otherwise — correct at
         # 10^12-vertex scale, wasteful below it).
         from .plans.joins import BROADCAST_MAX_VERTICES
@@ -260,7 +261,7 @@ class Graph:
             n_vertices=n_vertices,
             n_edges=n_edges,
         )
-        g._build_caches.append(ranked)
+        g._build_caches.append(ids)
         return g
 
     # -- scalars -----------------------------------------------------------
@@ -332,6 +333,9 @@ class Graph:
             self.vertices.join(deg, "vid", "left")
             .select("vid", F.coalesce("degree", F.lit(0)).alias("degree"))
         )
+        # a leaf like the tables it is built from: a plain persist over the
+        # vertex leaf is missed by queries that also read graph.vertices
+        # (plans/checkpoints.flat_persist)
         self._degrees, _ = flat_persist(out.repartition(self.num_partitions, "vid"))
         return self._degrees
 

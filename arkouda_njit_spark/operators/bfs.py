@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.local import local_frame
 
 
 def bfs_layers(graph: Graph, source: int, source_is_label: bool = True) -> DataFrame:
@@ -42,7 +43,7 @@ def bfs_layers(graph: Graph, source: int, source_is_label: bool = True) -> DataF
     else:
         src_vid = int(source)
 
-    sources = spark.createDataFrame([(0, int(src_vid))], "root long, vid long")
+    sources = local_frame(spark, [(0, int(src_vid))], "root long, vid long")
     visited = multi_source_bfs(graph.edges.select("src", "dst"), sources)
     return graph.vertices.join(visited.select("vid", "depth"), "vid", "left").select(
         "vid", F.coalesce("depth", F.lit(-1)).alias("depth")

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_persist
 from .triangles import _undirected_simple_edges, triangles_per_vertex
 
 
@@ -109,11 +108,13 @@ def reciprocity(graph) -> float:
     (non-loop, deduplicated) directed edges whose reverse edge also
     exists — ``nx.overall_reciprocity``. One self-semi-join on the
     reversed key + two scalar counts."""
-    e, total = flat_persist(
+    e = (
         graph.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        .persist()
     )
+    total = e.count()
     if total == 0:
         e.unpersist()
         raise ValueError("reciprocity is undefined on an empty edge set")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.local import local_frame
 from .triangles import _undirected_simple_edges
 
 
@@ -148,7 +149,7 @@ def densest_subgraph(
         for d in deltas:
             d.unpersist()
     else:  # edgeless input
-        verts = spark.createDataFrame([], "vid long")
+        verts = local_frame(spark, [], "vid long")
     return DensestSubgraphResult(
         density=best_density if best_density >= 0 else 0.0,
         n_vertices=best_v,

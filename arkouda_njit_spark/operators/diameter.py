@@ -32,7 +32,6 @@ from collections import deque
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_persist
 from .bfs import multi_source_bfs
 from .connected_components import connected_components
 
@@ -69,7 +68,7 @@ def diameter(graph: Graph, exact: bool = False, bfs_threshold: int = 2500) -> in
     """
     import pandas as pd
 
-    comps, _ = flat_persist(connected_components(graph))
+    comps = connected_components(graph).persist()
     sizes = comps.groupBy("component").agg(F.count("*").alias("size"))
     edges = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
 

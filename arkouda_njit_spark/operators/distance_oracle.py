@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_persist
+from ..plans.local import local_frame
 from .bfs import multi_source_bfs
 
 
@@ -62,7 +62,8 @@ def distance_sketch(
 
     n = graph.n_vertices
     if n == 0:
-        return graph.spark.createDataFrame(
+        return local_frame(
+            graph.spark,
             [], "vid long, set_id int, seed_vid long, dist long"
         )
     if num_sets is None:
@@ -96,7 +97,7 @@ def distance_sketch(
             e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .distinct()
         )
-    edges, _ = flat_persist(edges)
+    edges = edges.persist()
     # PRUNED multi-set BFS (the paper's semantics): within a set, seeds
     # COMPETE — a vertex is claimed once, by its closest seed (ties: min
     # seed id), and only the claimant's wave continues through it. State

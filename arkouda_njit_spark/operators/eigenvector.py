@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_checkpoint, flat_persist
+from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop
 
 
@@ -40,7 +40,7 @@ def eigenvector_centrality(
     ``nx.eigenvector_centrality(..., weight="weight")``.
     """
     cols = ["src", "dst"] + (["weight"] if weighted else [])
-    edges, _ = flat_persist(graph.edges.select(*cols))
+    edges = graph.edges.select(*cols).persist()
     verts = graph.vertices.select("vid")
     n = graph.n_vertices
     init = verts.select("vid", F.lit(1.0 / n).alias("x"))

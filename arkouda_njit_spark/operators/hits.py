@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_checkpoint, flat_persist
+from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop
 
 
@@ -35,7 +35,7 @@ def hits(
     """(vid, hub, auth) per vertex. ``tol > 0`` adds an L1-convergence job
     per iteration; ``tol <= 0`` runs exactly ``max_iterations`` alternating
     updates (the replayable fixed-iteration mode)."""
-    edges, _ = flat_persist(graph.edges.select("src", "dst").distinct())
+    edges = graph.edges.select("src", "dst").distinct().persist()
     verts = graph.vertices.select("vid")
     n = graph.n_vertices
     init = verts.select(

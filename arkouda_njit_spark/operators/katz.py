@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_checkpoint, flat_persist
+from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop
 
 
@@ -44,7 +44,7 @@ def katz_centrality(
     if n == 0:
         return graph.vertices.select("vid", F.lit(0.0).alias("katz"))
     wcol = F.col(weight) if weight else F.lit(1.0)
-    edges, _ = flat_persist(graph.edges.select("src", "dst", wcol.alias("w")))
+    edges = graph.edges.select("src", "dst", wcol.alias("w")).persist()
     verts = graph.vertices.select("vid")
     init = verts.select("vid", F.lit(0.0).alias("x"))
 

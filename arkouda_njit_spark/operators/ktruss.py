@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.local import local_frame
 from .triangles import (
     BIG_EDGE_THRESHOLD,
     PACKED_BROADCAST_MAX_EDGES,
@@ -374,5 +375,5 @@ def truss_decomposition(graph: Graph) -> DataFrame:
         cur = kept
         k += 1
     if assigned is None:
-        assigned = spark.createDataFrame([], "u long, v long, truss int")
+        assigned = local_frame(spark, [], "u long, v long, truss int")
     return assigned

@@ -28,6 +28,7 @@ from ..graph import Graph
 from ..plans.checkpoints import flat_checkpoint, flat_persist
 from ..plans.iterate import FixpointLoop, l1_diff
 from ..plans.joins import state_join_side
+from ..plans.local import local_frame
 
 
 def prepare_pagerank(graph: Graph, weight: str | None = None):
@@ -210,10 +211,15 @@ def personalized_pagerank(
     if total <= 0:
         raise ValueError("personalization weights must sum to a positive value")
     spark = graph.spark
-    seed_tbl = spark.createDataFrame(
+    seed_tbl = local_frame(
+        spark,
         [(int(k), float(v) / total) for k, v in personalization.items() if v],
         "label long, t double",
     )
+    # a flat leaf, not a plain persist: every step joins it next to
+    # graph.vertices, and a cache over the vertex leaf is not found when
+    # the same leaf appears twice in a query (plans/checkpoints.flat_persist)
+    # and the seed join would be recomputed every iteration
     tvec, n_seeds = flat_persist(graph.vertices.join(seed_tbl, "label").select("vid", "t"))
     if n_seeds != seed_tbl.count():
         tvec.unpersist()
@@ -328,7 +334,8 @@ def ppr_montecarlo(
         raise ValueError("walks_per_source >= 1 and max_steps >= 1 required")
     spark = graph.spark
     R = walks_per_source
-    src_tbl = spark.createDataFrame(
+    src_tbl = local_frame(
+        spark,
         [(int(s),) for s in sources], "label long"
     ).distinct()
     src_vids = graph.vertices.join(src_tbl, "label").select("vid")
@@ -346,7 +353,7 @@ def ppr_montecarlo(
         )
         .localCheckpoint(eager=True)
     )
-    edges, _ = flat_persist(graph.edges.select("src", "dst"))
+    edges = graph.edges.select("src", "dst").persist()
     thresh = int(alpha * (1 << 30))
     ended = []  # each element filters a checkpointed state: flat lineage
     for t in range(1, max_steps + 1):

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_checkpoint, flat_persist
+from ..plans.checkpoints import flat_checkpoint
 from ..plans.iterate import FixpointLoop
 
 
@@ -62,7 +62,7 @@ def salsa(
     indeg = e.groupBy("dst").agg(F.count("*").alias("id_"))
     # degree-normalized transition weights, attached ONCE: the per-
     # iteration work is then exactly the HITS join shape
-    edges, _ = flat_persist(
+    edges = (
         e.join(outdeg, "src")
         .join(indeg, "dst")
         .select(
@@ -71,6 +71,7 @@ def salsa(
             (F.lit(1.0) / F.col("od")).alias("w_fwd"),
             (F.lit(1.0) / F.col("id_")).alias("w_bwd"),
         )
+        .persist()
     )
     verts = graph.vertices.select("vid")
     n = graph.n_vertices

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_persist
 from .bfs import multi_source_bfs
 
 
@@ -230,55 +229,48 @@ def bowtie_decomposition(graph: DiGraph, scc: DataFrame | None = None) -> DataFr
     the SCC fixpoint twice."""
     if scc is None:
         scc = strongly_connected_components(graph)
-    # the sets below feed the sweeps, the set differences and the final
-    # region join: cache each as a flat leaf
-    scc, _ = flat_persist(scc)
+    scc = scc.persist()
     giant = (
         scc.groupBy("scc").agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), "scc")
         .limit(1)
     )
-    core, _ = flat_persist(scc.join(giant.select("scc"), "scc").select("vid"))
+    core = scc.join(giant.select("scc"), "scc").select("vid").persist()
     edges = graph.edges.select("src", "dst")
 
     def reach(edge_tbl: DataFrame, from_set: DataFrame) -> DataFrame:
         srcs = from_set.select(F.lit(0).alias("root"), "vid")
         return multi_source_bfs(edge_tbl, srcs).select("vid").distinct()
 
-    fwd, _ = flat_persist(reach(edges, core))  # core + OUT + ...
-    rev, _ = flat_persist(
-        reach(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")), core)
-    )
-    out_set, _ = flat_persist(fwd.join(core, "vid", "left_anti"))
-    in_set, _ = flat_persist(rev.join(core, "vid", "left_anti"))
-    rest, _ = flat_persist(
+    fwd = reach(edges, core).persist()  # core + OUT + ...
+    rev = reach(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")), core).persist()
+    out_set = fwd.join(core, "vid", "left_anti").persist()
+    in_set = rev.join(core, "vid", "left_anti").persist()
+    rest = (
         graph.vertices.select("vid")
         .join(fwd, "vid", "left_anti")
         .join(rev, "vid", "left_anti")
+        .persist()
     )
     # fringe sweeps restricted to `rest`: tendrils and tubes never cross the core
     rest_edges = (
         edges.join(rest.withColumnRenamed("vid", "dst"), "dst", "left_semi")
     )  # edges INTO rest; sources can be IN or rest
-    from_in, _ = flat_persist(
-        reach(
-            rest_edges.join(
-                rest.unionAll(in_set).withColumnRenamed("vid", "src"), "src", "left_semi"
-            ),
-            in_set,
-        ).join(rest, "vid", "left_semi")
-    )
+    from_in = reach(
+        rest_edges.join(
+            rest.unionAll(in_set).withColumnRenamed("vid", "src"), "src", "left_semi"
+        ),
+        in_set,
+    ).join(rest, "vid", "left_semi").persist()
     rest_edges_rev = (
         edges.join(rest.withColumnRenamed("vid", "src"), "src", "left_semi")
     )
-    to_out, _ = flat_persist(
-        reach(
-            rest_edges_rev.join(
-                rest.unionAll(out_set).withColumnRenamed("vid", "dst"), "dst", "left_semi"
-            ).select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            out_set,
-        ).join(rest, "vid", "left_semi")
-    )
+    to_out = reach(
+        rest_edges_rev.join(
+            rest.unionAll(out_set).withColumnRenamed("vid", "dst"), "dst", "left_semi"
+        ).select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        out_set,
+    ).join(rest, "vid", "left_semi").persist()
 
     region = (
         graph.vertices.select("vid")

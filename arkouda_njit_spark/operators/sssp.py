@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.local import local_frame
 
 
 def shortest_paths(
@@ -57,7 +58,7 @@ def shortest_paths(
         vids = [r["vid"] for r in rows]
     else:
         vids = labels
-    sources = spark.createDataFrame([(v, v) for v in vids], "root long, vid long")
+    sources = local_frame(spark, [(v, v) for v in vids], "root long, vid long")
     return multi_source_shortest_paths(
         graph.edges.select("src", "dst", "weight"), sources, max_rounds=max_rounds
     )

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
-from ..plans.checkpoints import flat_persist
 
 # join-dispatch crossover for the per-level EXTENSION join: a filtered edge
 # table at or below this many rows is broadcast (hash relation build is cheap
@@ -127,7 +126,7 @@ def subgraph_search(
     pedges = [(vidx[a], vidx[b]) for a, b in pattern_edges if a != b]
     pedge_set = set(pedges)
 
-    E, _ = flat_persist(graph.edges.select("src", "dst"))
+    E = graph.edges.select("src", "dst").persist()
 
     # Degree-based candidate pruning (the reference's vertex validator,
     # SubgraphSearch.chpl:1106-1118 + feasibility rules 1307-1475): a graph
@@ -145,7 +144,7 @@ def subgraph_search(
     g_in = E.groupBy("dst").count().select(
         F.col("dst").alias("vid"), F.col("count").alias("_id")
     )
-    degs, _ = flat_persist(
+    degs = (
         graph.vertices.select("vid")
         .join(g_out, "vid", "left")
         .join(g_in, "vid", "left")
@@ -154,17 +153,15 @@ def subgraph_search(
             F.coalesce("_od", F.lit(0)).alias("_od"),
             F.coalesce("_id", F.lit(0)).alias("_id"),
         )
+        .persist()
     )
 
     # ONE degree-augmented edge table, cached: every per-level edge table
     # is then a pure FILTER over this cache (the degree feasibility bounds
-    # reach the in-memory scan — no join per level). A plain persist, not
-    # a flat leaf: the filters must reach the in-memory scan, whose
-    # per-batch column statistics skip batches the bounds exclude, and the
-    # plan under it is already shallow (two leaves and two joins). Join
-    # dispatch is then ROLE-aware, not table-size-flat: the extension join
-    # (output = the level's fan-out; shuffle volume bounded by its inputs)
-    # follows the measured filtered-table size, while semi/anti constraint joins
+    # reach the in-memory scan — no join per level). Join dispatch is then
+    # ROLE-aware, not table-size-flat: the extension join (output = the
+    # level's fan-out; shuffle volume bounded by its inputs) follows the
+    # measured filtered-table size, while semi/anti constraint joins
     # (probe side = the fan-out, orders of magnitude bigger than either
     # input) broadcast their build side up to a much higher ceiling so the
     # fan-out streams through them inside one codegen stage instead of

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_persist
+from ..plans.local import local_frame
 from .triangles import _triangle_rows_cached
 
 # Batagelj–Mrvar tricode → triad-class lookup (public classification table,
@@ -75,7 +75,7 @@ def triadic_census(graph: Graph) -> DataFrame:
     spark = graph.edges.sparkSession
     n = graph.n_vertices
 
-    dy, _ = flat_persist(_dyads(graph))
+    dy = _dyads(graph).persist()
 
     # --- dyad totals and per-vertex dyad-type counts -----------------------
     tot = dy.agg(
@@ -155,7 +155,7 @@ def triadic_census(graph: Graph) -> DataFrame:
         if graph.n_edges >= BIG_EDGE_THRESHOLD
         else (lambda df: df)
     )
-    coded, _ = flat_persist(
+    coded = (
         srt.join(sh(d12), c12).join(sh(d13), c13).join(sh(d23), c23)
         .select(
             "x1", "x2", "x3",
@@ -166,6 +166,7 @@ def triadic_census(graph: Graph) -> DataFrame:
             ).alias("code"),
             F.col("pf"), F.col("pb"), F.col("qf"), F.col("qb"), F.col("rf"), F.col("rb"),
         )
+        .persist()
     )
 
     lut = F.array(*[F.lit(TRIAD_NAMES[t - 1]) for t in _TRICODES])
@@ -234,6 +235,7 @@ def triadic_census(graph: Graph) -> DataFrame:
         census[t] for t in TRIAD_NAMES if t != "003"
     )
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(t, int(census[t])) for t in TRIAD_NAMES], "triad_type string, count long"
     )

@@ -21,18 +21,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_persist
 from .triangles import _triangle_rows_cached
 
 
 def triangle_centrality(graph: Graph) -> DataFrame:
     """(vid, centrality) for every vertex."""
     closed, handles = _triangle_rows_cached(graph)
-    und = handles[0]  # the cached canonical pair set — reused below
+    und = handles[0]  # the persisted canonical pair set — reused below
     # cache the triangle rows (they feed four consumers); released
     # deterministically after the V-sized result is materialized below —
     # a localCheckpoint here would linger until driver GC
-    tri, t_total = flat_persist(closed)
+    tri = closed.persist()
+    t_total = tri.count()
 
     # T(v): triangles per vertex.
     t_v = (

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.checkpoints import flat_checkpoint, flat_persist
+from ..plans.local import local_frame
 
 # past this many edges, wedge/closing joins dispatch to shuffle_hash: the
 # broadcast hash build is single-threaded on the driver (measured flat 2-to-8
@@ -230,7 +231,8 @@ def triangles_per_vertex(graph: Graph, vertices: list[int] | None = None) -> Dat
         spark = graph.spark
         # dedupe: duplicate vids would fan out the final left join (one
         # incid row per duplicate) and cross-multiply counts downstream
-        qvids = spark.createDataFrame(
+        qvids = local_frame(
+            spark,
             [(int(v),) for v in dict.fromkeys(vertices)], "vid long"
         )
         tri, handles = _triangle_rows_localized(graph, qvids)
@@ -280,7 +282,8 @@ def triangles(graph: Graph, vertices: list[int] | None = None):
     if vertices is None:
         return triangle_total_reference(graph)
     spark = graph.spark
-    req = spark.createDataFrame(
+    req = local_frame(
+        spark,
         [(i, int(lab)) for i, lab in enumerate(vertices)], "in_pos long, node long"
     )
     # label -> vid; labels not found drop out of the inner join
@@ -304,7 +307,12 @@ def triangles(graph: Graph, vertices: list[int] | None = None):
     pos = dense_rank_ids(
         got.select("in_pos").distinct(), "in_pos", graph.num_partitions, out_col="pos"
     )
-    return got.join(pos, "in_pos").select("pos", "node", "triangles")
+    # materialize the (input-list-sized) result so the ids' cache can go
+    out = got.join(pos, "in_pos").select("pos", "node", "triangles").localCheckpoint(
+        eager=True
+    )
+    pos.unpersist()
+    return out
 
 
 def approx_triangle_count(

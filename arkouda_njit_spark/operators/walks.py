@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpoints import flat_persist
 
 
 def random_walks(
@@ -48,7 +47,7 @@ def random_walks(
         .localCheckpoint(eager=True)
     )
     finished = None
-    edges, _ = flat_persist(graph.edges.select("src", "dst"))
+    edges = graph.edges.select("src", "dst").persist()
     for t in range(1, walk_length + 1):
         # the candidate fan-out (frontier × out-degree) carries ONLY
         # (walk_id, dst) — the growing path array joins back afterwards by
@@ -153,7 +152,7 @@ def node2vec_walks(
     if p <= 0 or q <= 0:
         raise ValueError("p and q must be positive")
     k = walks_per_vertex
-    edges, _ = flat_persist(graph.edges.select("src", "dst").distinct())
+    edges = graph.edges.select("src", "dst").distinct().persist()
     prev_edges = edges.select(
         F.col("src").alias("prev"), F.col("dst").alias("cand"), F.lit(True).alias("_nb")
     )

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoints import flat_persist
+from ..plans.local import local_frame
 
 CRITERIA = {
     "log10": lambda n, mult: __import__("math").floor(__import__("math").log10(n)) if n > 0 else 0,
@@ -189,7 +189,7 @@ def _wcc_distributed(
         .localCheckpoint(eager=True)
     )
     results: list[DataFrame] = []
-    empty = spark.createDataFrame([], out_schema)
+    empty = local_frame(spark, [], out_schema)
 
     for _round in range(max_rounds):
         if work.isEmpty():
@@ -200,21 +200,21 @@ def _wcc_distributed(
             .select(F.concat_ws("_", "pk", "comp").alias("pk"), "src", "dst")
             .localCheckpoint(eager=True)
         )
-        deg, _ = flat_persist(
+        deg = (
             work.select("pk", F.col("src").alias("vid"))
             .unionAll(work.select("pk", F.col("dst").alias("vid")))
             .groupBy("pk", "vid")
             .agg(F.count("*").alias("deg"))
-        )
-        stats, _ = flat_persist(
-            deg.groupBy("pk").agg(F.count("*").alias("n"), (F.sum("deg") / 2).alias("m"))
-        )
+        ).persist()
+        stats = deg.groupBy("pk").agg(
+            F.count("*").alias("n"), (F.sum("deg") / 2).alias("m")
+        ).persist()
 
         # 1) pieces that fit go to the exact per-piece recursion FIRST —
         # before any trimming, so small satellite pieces (where the
         # criterion can be 0 and a pendant is legal in a well-connected
         # cluster) get the exact path's semantics untouched
-        fit, _ = flat_persist(stats.filter(F.col("m") <= max_cluster_edges).select("pk"))
+        fit = stats.filter(F.col("m") <= max_cluster_edges).select("pk").persist()
         fitted = work.join(fit, "pk", "left_semi")
         if not fitted.isEmpty():
             results.append(
@@ -225,8 +225,8 @@ def _wcc_distributed(
         # restrict the per-piece tables to the still-oversized pieces —
         # otherwise fit pieces would ALSO be blanket-accepted below
         # (double emission)
-        deg_rem, _ = flat_persist(deg.join(fit, "pk", "left_anti"))
-        stats_rem, _ = flat_persist(stats.join(fit, "pk", "left_anti"))
+        deg_rem = deg.join(fit, "pk", "left_anti").persist()
+        stats_rem = stats.join(fit, "pk", "left_anti").persist()
         if work.isEmpty():
             for df in (deg, stats, fit, deg_rem, stats_rem):
                 df.unpersist()
@@ -254,12 +254,12 @@ def _wcc_distributed(
             )
             if cur_deg is not deg_rem:
                 cur_deg.unpersist()
-            cur_deg, _ = flat_persist(
+            cur_deg = (
                 work.select("pk", F.col("src").alias("vid"))
                 .unionAll(work.select("pk", F.col("dst").alias("vid")))
                 .groupBy("pk", "vid")
                 .agg(F.count("*").alias("deg"))
-            )
+            ).persist()
         if trimmed:
             # re-derive piece identity (trim can disconnect) next round
             for df in (deg, stats, fit, deg_rem, stats_rem):
@@ -431,7 +431,7 @@ def well_connected_components(
     # Oversized clusters (edge count > max_cluster_edges) cannot ship to a
     # single grouped-map task: route them through the distributed path
     # (reference: WellConnectedComponentsDistributed.chpl).
-    intra, _ = flat_persist(intra)
+    intra = intra.persist()
     ecounts = intra.groupBy("cluster").agg(F.count("*").alias("m"))
     big = ecounts.filter(F.col("m") > max_cluster_edges).select("cluster")
     small_intra = intra.join(big, "cluster", "left_anti")
@@ -460,6 +460,9 @@ def well_connected_components(
     ids = dense_rank_ids(
         raw.select("cluster_min").distinct(), "cluster_min", P, out_col="cluster"
     )
-    return raw.join(ids, "cluster_min").select(
+    # materialize the (output-sized) result so the ids' cache can go
+    out = raw.join(ids, "cluster_min").select(
         F.col("vertex"), F.col("cluster").cast("long")
-    )
+    ).localCheckpoint(eager=True)
+    ids.unpersist()
+    return out

@@ -42,6 +42,14 @@ triangle-count query. The leaf scans the same cached blocks through a
 one-node plan, so plan work stops growing with the build's history.
 Unlike ``localCheckpoint``, the rows stay in the persisted cache whose
 lineage recomputes lost blocks.
+
+One pitfall: a plain ``persist()`` of a query over a leaf is missed by
+the cache lookup of any later query that reads the same leaf twice (say
+``vertices.join(cached_over_vertices)``). Spark gives the second
+occurrence fresh attribute ids, and ``LogicalRDD`` canonicalization does
+not normalize the ids inside the partitioning and ordering the leaf
+carries, so the two plans no longer compare equal and the cached query is
+recomputed. Cache such a frame with :func:`flat_persist` as well.
 """
 
 from __future__ import annotations

@@ -143,6 +143,19 @@ class FixpointLoop:
                     best = i if best is None else max(best, i)
         return best
 
+    def _converged_path(self) -> str:
+        return os.path.join(self.checkpoint_dir, "converged.json")
+
+    def converged_epoch(self) -> int | None:
+        """The epoch a finished run converged at, if its tolerance covers
+        this loop's (a tighter ``tol`` has more steps to run)."""
+        path = self._converged_path()
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            mark = json.load(f)
+        return mark["epoch"] if self.tol >= mark["tol"] else None
+
     def _write_epoch(self, state: DataFrame, i: int) -> None:
         state.write.mode("overwrite").parquet(self._epoch_path(i))
         with open(os.path.join(self.checkpoint_dir, "metrics.json"), "w") as f:
@@ -172,6 +185,9 @@ class FixpointLoop:
             last = self.latest_epoch()
             if last is not None:
                 state = spark.read.parquet(self._epoch_path(last))
+                if last == self.converged_epoch():
+                    # a finished, converged run: its answer, not one more step
+                    return state.localCheckpoint(eager=True)
                 start_iter = last + 1
                 written = last
                 # reload pre-crash metrics so the next epoch write doesn't
@@ -193,6 +209,12 @@ class FixpointLoop:
                             for m in json.load(f)
                         ]
 
+        if (
+            self.checkpoint_dir
+            and start_iter < self.max_iterations
+            and os.path.exists(self._converged_path())
+        ):
+            os.remove(self._converged_path())  # this run writes new epochs
         state = state.localCheckpoint(eager=True)
         # unroll only applies when there is no per-iteration convergence
         # job to run and no durable per-step epoch contract to honour
@@ -202,6 +224,7 @@ class FixpointLoop:
             else 1
         )
         i = start_iter
+        converged = False
         while i < self.max_iterations:
             t0 = time.time()
             k = min(unroll, self.max_iterations - i)
@@ -235,6 +258,7 @@ class FixpointLoop:
                 written = i - 1
 
             if self.convergence and changed <= self.tol:
+                converged = True
                 break
 
         # the final state is the epoch of the last iteration run, so a
@@ -242,4 +266,8 @@ class FixpointLoop:
         # nothing to write when that epoch was just written
         if self.checkpoint_dir and i > 0 and written != i - 1:
             self._write_epoch(state, i - 1)
+        if self.checkpoint_dir and converged:
+            # a later call with the same checkpoint_dir returns this state
+            with open(self._converged_path(), "w") as f:
+                json.dump({"epoch": i - 1, "tol": self.tol}, f)
         return state

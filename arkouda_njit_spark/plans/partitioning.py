@@ -10,8 +10,11 @@ serializes the whole vertex set through one task and cannot work at
      partitions, local order within),
   2. count rows per partition (one small job), prefix-sum the counts on the
      driver (P integers),
-  3. assign ``offset[pid] + local_index`` per partition with an Arrow-batched
-     ``mapInPandas`` (no per-row Python).
+  3. assign ``offset[pid] + local_index`` per partition in one projection
+     over the cached partitions: the offsets ride in as a literal array
+     indexed by ``spark_partition_id()``, and the local index is
+     ``monotonically_increasing_id()`` minus its ``pid << 33`` partition
+     prefix — JVM expressions only, no Python worker task per partition.
 
 This yields exactly the reference's ascending-label dense numbering.
 """
@@ -26,22 +29,24 @@ def dense_rank_ids(df: DataFrame, col: str, num_partitions: int, out_col: str = 
     """Assign dense ids 0..n-1 in ascending ``col`` order, scalably.
 
     ``df`` must contain distinct values of ``col``. Returns (out_col, col).
+
+    The ids are computed from a persisted range-partitioned copy of ``df``
+    (a recompute over a fresh range sample would not fit the prefix
+    offsets), and the returned frame owns that cache: keep it while the
+    ids, or anything lazily derived from them, may still be computed, then
+    call ``unpersist()`` on the returned frame to release it.
     """
     return dense_rank_ids_counted(df, col, num_partitions, out_col)[0]
 
 
 def dense_rank_ids_counted(
     df: DataFrame, col: str, num_partitions: int, out_col: str = "vid"
-) -> tuple[DataFrame, int, DataFrame]:
+) -> tuple[DataFrame, int]:
     """:func:`dense_rank_ids` plus the total row count, which the two-pass
     scheme computes anyway (sum of the per-partition counts) — callers that
     need n for a broadcast-vs-shuffle decision get it for free instead of
-    paying a separate count action — and the persisted range-partitioned
-    input the ids are computed from. The caller owns that cache: keep it
-    while the ids may be recomputed (a recompute would re-sample the range
-    bounds, and the prefix offsets only fit the first sample), then
-    unpersist it."""
-    spark = df.sparkSession
+    paying a separate count action. Same cache ownership: the returned
+    frame's ``unpersist()`` releases the range-partitioned cache."""
     ordered = (
         df.select(col)
         .repartitionByRange(num_partitions, F.col(col))
@@ -56,32 +61,25 @@ def dense_rank_ids_counted(
         .collect()
     )
     sizes = {r["pid"]: r["count"] for r in counts}
-    offsets = {}
+    offsets = [0] * (max(sizes, default=-1) + 1)
     acc = 0
     for pid in sorted(sizes):
         offsets[pid] = acc
         acc += sizes[pid]
-    offsets_b = spark.sparkContext.broadcast(offsets)
 
-    out_schema = f"{out_col} long, {col} {df.schema[col].dataType.simpleString()}"
+    # Pass 2: offset[pid] + position within the cached partition (its
+    # scan order is the sorted order); pids without rows are never read
+    pid = F.spark_partition_id()
+    local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    base = F.element_at(F.array(*[F.lit(o).cast("long") for o in offsets or [0]]), pid + 1)
+    result = ordered.select((base + local).alias(out_col), col)
 
-    def attach(iterator):
-        import pandas as pd
-        from pyspark import TaskContext
+    def unpersist(blocking: bool = False) -> DataFrame:
+        ordered.unpersist(blocking)
+        return result
 
-        pid = TaskContext.get().partitionId()
-        base = offsets_b.value.get(pid, 0)
-        seen = 0
-        for batch in iterator:
-            n = len(batch)
-            out = pd.DataFrame(
-                {out_col: range(base + seen, base + seen + n), col: batch[col]}
-            )
-            seen += n
-            yield out
-
-    result = ordered.mapInPandas(attach, schema=out_schema)
-    return result, acc, ordered
+    result.unpersist = unpersist  # type: ignore[method-assign]
+    return result, acc
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -75,6 +75,11 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging captures the Python call site on
+        # every API call (a stack walk plus two extra JVM round trips per
+        # column expression): ~half the driver time of building a small
+        # select on a 4-core box. Errors still carry the JVM-side context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if not SparkSession.getActiveSession():

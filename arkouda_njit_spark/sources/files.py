@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph, Graph
+from ..plans.local import local_frame
 
 
 def read_matrix_market_file(
@@ -228,9 +229,9 @@ def degree_sort_relabel(graph):
         ).alias("k")
     )
     ranked = dense_rank_ids(keyed, "k", graph.num_partitions, out_col="new")
-    return _apply_relabel(
-        graph, ranked.select(F.col("k.v").alias("vid"), "new")
-    )
+    out = _apply_relabel(graph, ranked.select(F.col("k.v").alias("vid"), "new"))
+    out._build_caches.append(ranked)  # the relabelled tables read it lazily
+    return out
 
 
 def rcm_relabel(graph, start: int | None = None):
@@ -254,7 +255,7 @@ def rcm_relabel(graph, start: int | None = None):
         start = (
             deg.orderBy("degree", "vid").limit(1).collect()[0]["vid"]
         )
-    roots = spark.createDataFrame([(0, int(start))], "root long, vid long")
+    roots = local_frame(spark, [(0, int(start))], "root long, vid long")
     depths = multi_source_bfs(graph.edges.select("src", "dst"), roots).select(
         "vid", "depth"
     )
@@ -273,9 +274,11 @@ def rcm_relabel(graph, start: int | None = None):
     )
     cm = dense_rank_ids(keyed, "k", graph.num_partitions, out_col="cm")
     deg.unpersist()
-    return _apply_relabel(
+    out = _apply_relabel(
         graph,
         cm.select(
             F.col("k.v").alias("vid"), (F.lit(n - 1) - F.col("cm")).alias("new")
         ),
     )
+    out._build_caches.append(cm)  # the relabelled tables read it lazily
+    return out

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 TWO63 = float(2**63)
 
 
@@ -73,8 +75,8 @@ KARATE_DST = [1, 2, 3, 4, 5, 6, 7, 8, 10, 11, 12, 13, 17, 19, 21, 31, 0, 2,
 
 def karate_club_graph(spark: SparkSession) -> DataFrame:
     """generators.py:62-116 (34 vertices, 78 undirected edges)."""
-    rows = list(zip([int(x) for x in KARATE_SRC], [int(x) for x in KARATE_DST]))
-    return spark.createDataFrame(rows, "src long, dst long")
+    rows = zip([int(x) for x in KARATE_SRC], [int(x) for x in KARATE_DST])
+    return local_frame(spark, rows, "src long, dst long")
 
 
 def random_tree(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
@@ -198,7 +200,7 @@ def barabasi_albert_graph(spark: SparkSession, n: int, m: int, seed: int = 42) -
         edges.extend((source, t) for t in targets)
         repeated.extend([source] * m)
         repeated.extend(targets)
-    return spark.createDataFrame(edges, "src long, dst long")
+    return local_frame(spark, edges, "src long, dst long")
 
 
 def watts_strogatz_graph(

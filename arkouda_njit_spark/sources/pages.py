@@ -301,10 +301,10 @@ def _string_keyed_digraph(
         .unionAll(dedup.select(F.col(dst_col).alias("u")))
         .distinct()
     )
-    vertices, n_keys, ranked = dense_rank_ids_counted(keys, "u", P, out_col="vid")
-    vertices = vertices.withColumnRenamed("u", "url")
-    # The vertex map's size is opaque to Catalyst after the mapInPandas
-    # dense rank, so the string-keyed remap joins planned as sort-merge
+    ids, n_keys = dense_rank_ids_counted(keys, "u", P, out_col="vid")
+    vertices = ids.withColumnRenamed("u", "url")
+    # The vertex map's size is opaque to Catalyst after the dense rank,
+    # so the string-keyed remap joins planned as sort-merge
     # with full exchanges of BOTH sides; hint broadcast while the map fits
     # (the Graph._build pattern) — the two-pass dense rank already knows n
     # for free, so the decision costs no extra action (guide §3.1).
@@ -341,9 +341,9 @@ def _string_keyed_digraph(
         edges, verts, weighted=True, num_partitions=P, n_vertices=n_keys, n_edges=n_edges
     )
     if eager:
-        ranked.unpersist()  # the checkpoints no longer read it
+        ids.unpersist()  # the checkpoints no longer read it
     else:
-        g._build_caches.append(ranked)
+        g._build_caches.append(ids)
     return g
 
 

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.checkpoints import flat_checkpoint
+from ..plans.local import local_frame
 
 
 def _canon_edges(df: DataFrame) -> DataFrame:
@@ -150,7 +151,7 @@ class StreamingConnectedComponents:
             return self.spark.read.parquet(
                 os.path.join(self.state_dir, m["labels_dir"])
             )
-        return self.spark.createDataFrame([], "vid long, label long")
+        return local_frame(self.spark, [], "vid long, label long")
 
     @property
     def n_components(self) -> int:

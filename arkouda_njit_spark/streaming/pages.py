@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..graph import DiGraph
+from ..plans.local import local_frame
 from ..sources.pages import _string_keyed_digraph, extract_links
 
 
@@ -71,7 +72,7 @@ class StreamingPageIngestor:
         m = self._manifest()
         if m["links_dir"]:
             return self.spark.read.parquet(os.path.join(self.state_dir, m["links_dir"]))
-        return self.spark.createDataFrame([], "url string, warc_ts timestamp, href string")
+        return local_frame(self.spark, [], "url string, warc_ts timestamp, href string")
 
     @property
     def n_pages(self) -> int:

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 
 def _canon(df: DataFrame) -> DataFrame:
     return (
@@ -134,7 +136,7 @@ class StreamingTriangleCounter:
             return self.spark.read.parquet(
                 os.path.join(self.state_dir, m["edges_dir"])
             )
-        return self.spark.createDataFrame([], "u long, v long")
+        return local_frame(self.spark, [], "u long, v long")
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int | None = None) -> int:
         m = self._manifest()

@@ -192,3 +192,29 @@ def test_durable_resume_with_larger_budget_matches_fresh_run(spark, tmp_path):
     # and it is not the 9- or 11-iteration answer an off-by-one resume gives
     nine = {r["vid"]: r["rank"] for r in pagerank(graph, tol=0, max_iterations=9).collect()}
     assert max(abs(nine[v] - fresh[v]) for v in fresh) > 1e-9
+
+
+def test_durable_converged_run_is_returned_not_extended(spark, tmp_path):
+    """A durable run that stops on convergence is marked converged: calling
+    it again with the same checkpoint_dir returns the stored answer without
+    running another step or writing another epoch."""
+    import os
+
+    graph = DiGraph.from_edges(spark, ALGO28_SRC, ALGO28_DST)
+    ckpt = str(tmp_path / "pr")
+
+    def epochs():
+        return sorted(e for e in os.listdir(ckpt) if e.startswith("epoch="))
+
+    first = {
+        r["vid"]: r["rank"]
+        for r in pagerank(graph, tol=1e-6, max_iterations=100, checkpoint_dir=ckpt).collect()
+    }
+    written = epochs()
+    assert written and "epoch=99" not in written  # it stopped on convergence
+    again = {
+        r["vid"]: r["rank"]
+        for r in pagerank(graph, tol=1e-6, max_iterations=100, checkpoint_dir=ckpt).collect()
+    }
+    assert again == first
+    assert epochs() == written

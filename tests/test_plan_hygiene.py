@@ -456,3 +456,16 @@ def test_graph_unpersist_releases_every_cache(spark):
     assert cached_ids() - before
     g.unpersist()
     assert not cached_ids() - before
+
+
+def test_degree_cache_found_next_to_the_vertex_leaf(spark):
+    """A query reading graph.vertices AND the degree table (itself built
+    over the vertex leaf) scans the degree cache instead of recomputing
+    degrees: both are flat leaves, so no aggregation appears in the plan."""
+    g = _rmat_graph(spark, scale=5)
+    try:
+        for q in (g.vertices.join(g.degree(), "vid"), g.degree().join(g.vertices, "vid")):
+            plan = q._jdf.queryExecution().optimizedPlan().toString()
+            assert "Aggregate" not in plan, plan
+    finally:
+        g.unpersist()
